@@ -78,7 +78,11 @@ _WIDTHS_EXT = np.append(_WIDTHS, _WIDTHS[0])
 
 
 def char_widths(codes: np.ndarray, font_name: str) -> np.ndarray:
-    """Vectorized per-mille advance widths for an array of code points."""
+    """Vectorized per-mille advance widths for an array of code points.
+
+    Codes must be non-negative (callers pass uint32): ``take(mode='clip')``
+    maps a negative code to index 0, the default width, where Python
+    negative indexing would have wrapped to the end of the table."""
     if is_mono(font_name):
         return np.full(codes.shape, _MONO_WIDTH, dtype=np.float64)
     return _WIDTHS_EXT.take(codes, mode='clip')

@@ -128,10 +128,16 @@ def test_corrupt_pdf_bytes_terminate():
     (pdfread.pdf_docs_df) wraps the per-file parse in a broad except and
     skips, so any exception class is batch-safe; what it cannot survive is
     a parser loop that stops advancing."""
+    from pdf2dom_spark.corpus import ORACLE_WORDS_PER_PAGE
     from pdf2dom_spark.pdfread import pdf_to_spans
+    from pdf2dom_spark.pdfwrite import oracle_pdf_bytes
 
-    real = open("/root/reference/src/test/resources/3-page-document.pdf",
-                "rb").read()
+    # a written 3-page PDF: page tree, xref table, Flate content streams
+    # and image XObjects, so the mutations hit every parser stage
+    real = oracle_pdf_bytes("fuzz-3page", " ".join(
+        f"w{i % 97}" for i in range(3 * ORACLE_WORDS_PER_PAGE)))
+    assert sum(" PG " in s["text"] for s in pdf_to_spans(real)
+               if s["kind"] == "text") == 3
     rng = random.Random(20260817)
     done = 0
     for trial in range(120):

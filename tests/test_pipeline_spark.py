@@ -73,6 +73,8 @@ def test_resume_idempotent(spark, docs, tmp_path):
     assert mid.select("part_id").distinct().count() == 6
     stats = run_checkpointed(spark, docs, out2, num_partitions=8, run_id="r2")
     assert stats["parts_done"] == 8
+    assert stats["docs_in"] == with_part_id(docs, 8).where(
+        F.col("part_id").isin(2, 5)).count()
 
     a = spark.read.parquet(f"{out1}/spans")
     b = spark.read.parquet(f"{out2}/spans")
@@ -129,6 +131,8 @@ def test_resume_idempotent_paged(spark, docs, tmp_path):
                              run_id="p2", split_min_bytes=0,
                              pages_per_group=4)
     assert stats["parts_done"] == 8
+    assert stats["docs_in"] == with_part_id(docs, 8).where(
+        F.col("part_id").isin(1, 6)).count()
     a = spark.read.parquet(f"{out1}/spans")
     b = spark.read.parquet(f"{out2}/spans")
     assert a.count() == b.count()
@@ -136,6 +140,78 @@ def test_resume_idempotent_paged(spark, docs, tmp_path):
     lin = spark.read.parquet(f"{out2}/lineage")
     by_run = {r["part_id"]: r["run_id"] for r in lin.collect()}
     assert by_run[1] == "p2" and by_run[6] == "p2"
+
+
+def test_zero_span_partitions_get_lineage_rows(spark, docs, tmp_path):
+    """A partition whose docs all extract to zero spans writes no files,
+    yet the run must record it as done with a zero lineage row — else every
+    resume re-extracts it. The processed set is observed upstream of the
+    kernel during the write, so it sees those partitions; a fail_parts
+    partition still gets no row, and a resume with nothing pending
+    returns at once."""
+    salted = with_part_id(docs, 8)
+    empty = (salted.withColumn("spans", F.when(
+        F.col("part_id").isin(0, 3), F.expr("slice(spans, 1, 0)"))
+        .otherwise(F.col("spans"))).drop("part_id"))
+    n_docs = dict(salted.groupBy("part_id").count().collect())
+    out = str(tmp_path / "zero")
+    first = run_checkpointed(spark, empty, out, num_partitions=8,
+                             run_id="z1", fail_parts={5})
+    assert first["parts_done"] == 7
+    assert first["docs_in"] == sum(n_docs.values())
+    lin = {r.part_id: r for r in spark.read.parquet(f"{out}/lineage")
+           .collect()}
+    assert set(lin) == set(range(8)) - {5}
+    for p in (0, 3):
+        assert lin[p].span_count == 0 and lin[p].checksum == 0
+        assert lin[p].doc_count == 0
+    spans = spark.read.parquet(f"{out}/spans")
+    assert spans.where(F.col("part_id").isin(0, 3, 5)).count() == 0
+
+    second = run_checkpointed(spark, empty, out, num_partitions=8,
+                              run_id="z2")
+    assert second["parts_done"] == 8 and second["docs_in"] == n_docs[5]
+    spans = spark.read.parquet(f"{out}/spans")
+    assert second["total_span_count"] == spans.count()
+    assert second["span_count"] == spans.where(F.col("part_id") == 5).count()
+    # nothing pending: AQE prunes the empty plan, observation included
+    for split in (None, 0):
+        noop = run_checkpointed(spark, empty, out, num_partitions=8,
+                                run_id="z3", split_min_bytes=split)
+        assert noop["span_count"] == 0 and noop["docs_in"] == 0
+        assert noop["parts_done"] == 8
+        assert noop["total_span_count"] == second["total_span_count"]
+    assert spark.read.parquet(f"{out}/lineage").count() == 8
+
+
+def test_input_evaluated_once(spark, docs, tmp_path):
+    """One checkpointed run reads its input once: no pre-pass for the
+    processed set (the Observation rides the write), on the flat path and
+    on the everything-splits paged path. ``docs_in`` is observed on the
+    same pass; the mixed-threshold paged plan reads ``pending`` in two
+    branches and still reports each doc once."""
+    n = docs.count()
+    doc_bytes = F.aggregate(
+        "spans", F.lit(0),
+        lambda acc, s: acc + F.coalesce(F.length(s["text"]), F.lit(0)))
+    sizes = sorted(r[0] for r in docs.select(doc_bytes).collect())
+    for split in (None, 0, sizes[len(sizes) // 2]):
+        rows = spark.sparkContext.accumulator(0)
+
+        def identity(batches, rows=rows):
+            for pdf in batches:
+                rows.add(len(pdf))
+                yield pdf
+
+        counted = docs.mapInPandas(identity, docs.schema)
+        out = str(tmp_path / f"once_{split}")
+        stats = run_checkpointed(spark, counted, out, num_partitions=8,
+                                 run_id="once", split_min_bytes=split,
+                                 pages_per_group=4)
+        assert stats["docs_in"] == n, split
+        assert stats["span_count"] == stats["total_span_count"] > 0
+        if split is None or split == 0:
+            assert rows.value == n, (split, rows.value)
 
 
 def test_skew_docs_exist_and_balanced(spark, docs):
