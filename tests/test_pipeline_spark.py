@@ -188,8 +188,9 @@ def test_input_evaluated_once(spark, docs, tmp_path):
     """One checkpointed run reads its input once: no pre-pass for the
     processed set (the Observation rides the write), on the flat path and
     on the everything-splits paged path. ``docs_in`` is observed on the
-    same pass; the mixed-threshold paged plan reads ``pending`` in two
-    branches and still reports each doc once."""
+    same pass. With a positive split threshold extract_spans_paged still
+    evaluates ``pending`` once per branch (small and big), yet the
+    observation reports each doc once."""
     n = docs.count()
     doc_bytes = F.aggregate(
         "spans", F.lit(0),
@@ -210,7 +211,7 @@ def test_input_evaluated_once(spark, docs, tmp_path):
                                  pages_per_group=4)
         assert stats["docs_in"] == n, split
         assert stats["span_count"] == stats["total_span_count"] > 0
-        if split is None or split == 0:
+        if split in (None, 0):
             assert rows.value == n, (split, rows.value)
 
 
