@@ -145,10 +145,13 @@ def main(argv=None):
         # refuse an output whose lineage was written by a batch run: the
         # streaming sink keys idempotence on batch_id, which batch lineage
         # lacks — mixing the two schemas corrupts resume for both modes
-        try:
-            prior_lin = spark.read.parquet(f"{args.output}/lineage")
-        except Exception:
-            prior_lin = None
+        from pdf2dom_spark import tables
+        prior_lin = None
+        if tables.table_exists(spark, f"{args.output}/lineage"):
+            try:
+                prior_lin = spark.read.parquet(f"{args.output}/lineage")
+            except Exception:  # exists but unreadable -> nothing done
+                pass
         if prior_lin is not None and "batch_id" not in prior_lin.columns:
             raise SystemExit(
                 f"error: {args.output}/lineage exists without a batch_id "
@@ -192,11 +195,12 @@ def main(argv=None):
         lineage_target = (f"{args.output}_lineage"
                           if tables.is_table_identifier(args.output)
                           else f"{args.output}/lineage")
-        try:
-            tables.read_table(spark, lineage_target).limit(1).collect()
-            has_lineage = True
-        except Exception:
-            has_lineage = False
+        has_lineage = tables.table_exists(spark, lineage_target)
+        if has_lineage:
+            try:
+                tables.read_table(spark, lineage_target).limit(1).collect()
+            except Exception:  # exists but unreadable -> nothing done
+                has_lineage = False
         if has_lineage:
             raise SystemExit(
                 f"error: {lineage_target} already exists; pass --resume "

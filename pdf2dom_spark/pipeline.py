@@ -17,8 +17,15 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
   its own files (Iceberg overwrite-by-partition in production; parquet
   dynamic overwrite in this sandbox).
 - **Resume = literal filter.** Lineage has at most P rows, read once to the
-  driver: pending work is ``docs.where(~part_id.isin(done))``, and the
-  processed part ids come from an ``Observation`` on that same pass.
+  driver (only when the table exists: a fresh output runs no failing read):
+  pending work is ``docs.where(~part_id.isin(done))``, and the processed
+  part ids come from an ``Observation`` on that same pass.
+- **Lineage = one pruned aggregate + one append.** After the spans write,
+  ``lineage`` over only this run's partitions (one exchange) is collected
+  once; the driver zero-fills the processed partitions without spans,
+  stamps ``run_id``/``completed_at``/``num_partitions`` and appends the at
+  most P rows as one Arrow-backed file. ``run_checkpointed`` reports the
+  wall seconds of the write and of this tail (``write_s``, ``lineage_s``).
 - **Bounded Arrow batches.** Set
   ``spark.sql.execution.arrow.maxRecordsPerBatch`` (docs vary wildly in
   size); the kernel is O(tokens) per batch with numpy-vectorized glyph work.
@@ -26,11 +33,17 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 
 from __future__ import annotations
 
+import time
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_batch
 from .schema import SPAN_FLAT_SCHEMA, SPAN_SCHEMA
@@ -81,12 +94,14 @@ def lineage(spans: DataFrame) -> DataFrame:
     order-insensitive checksum. bit_xor keeps the checksum overflow-free
     and commutative, so it is insensitive to within-partition ordering.
     All metrics are map-side-combinable aggregates over the already-written
-    partition — no extra shuffle."""
+    partition — one exchange of at most P partial rows. ``doc_count``
+    counts each doc's ``order == 0`` span: orders are dense from 0 per doc,
+    so this equals countDistinct(doc_id) without its second exchange."""
     def kind_count(k: str):
         return F.sum((F.col("kind") == k).cast("long")).alias(f"n_{k}")
 
     return spans.groupBy("part_id").agg(
-        F.countDistinct("doc_id").alias("doc_count"),
+        F.count_if(F.col("order") == 0).alias("doc_count"),
         F.count(F.lit(1)).alias("span_count"),
         kind_count("text"), kind_count("page"), kind_count("rect"),
         kind_count("line"), kind_count("image"), kind_count("font"),
@@ -96,6 +111,28 @@ def lineage(spans: DataFrame) -> DataFrame:
             F.xxhash64("doc_id", "order", "kind", "text", "media_ref")
         ).alias("checksum"),
     )
+
+
+def _lineage_table(stats: DataFrame, parts: list[int], run_id: str,
+                   num_partitions: int) -> pa.Table:
+    """The lineage rows of ``parts``: one collect of the per-partition
+    ``stats`` aggregate (``lineage``), zero-filled on the driver so a
+    partition whose docs all extracted to zero spans still gets its row
+    (checksum 0), and stamped with the run. The Arrow schema is the lineage
+    table's: ``part_id`` nullable, every other column non-null;
+    ``spark.createDataFrame`` of the result keeps it."""
+    schema = to_arrow_schema(T.StructType(
+        [T.StructField(f.name, f.dataType, f.name == "part_id")
+         for f in stats.schema]
+        + [T.StructField("run_id", T.StringType(), False),
+           T.StructField("completed_at", T.TimestampType(), False),
+           T.StructField("num_partitions", T.IntegerType(), False)]))
+    got = {r.part_id: r.asDict() for r in stats.collect()}
+    zero = dict.fromkeys(stats.columns, 0)
+    stamp = {"run_id": run_id, "num_partitions": num_partitions,
+             "completed_at": datetime.now(timezone.utc)}
+    return pa.Table.from_pylist(
+        [{**got.get(p, zero), "part_id": p, **stamp} for p in parts], schema)
 
 
 class FailureInjection(Exception):
@@ -159,10 +196,12 @@ def run_checkpointed(
         spans_dir = f"{out_dir}/spans"
         lineage_dir = f"{out_dir}/lineage"
         _recover_lineage_swap(lineage_dir)
-    try:
-        prior = tables.read_table(spark, lineage_dir)
-    except Exception:  # no lineage yet -> everything pending
-        prior = None
+    prior = None
+    if tables.table_exists(spark, lineage_dir):
+        try:
+            prior = tables.read_table(spark, lineage_dir)
+        except Exception:  # exists but unreadable -> nothing done
+            pass
     # lineage holds at most P rows: read it ONCE for the salt modulus, the
     # done set and the cumulative totals
     prior = [] if prior is None else prior.select(*[
@@ -214,7 +253,9 @@ def run_checkpointed(
         # no lineage row this run
         spans = spans.filter(~F.col("part_id").isin(*fail_parts))
 
+    t_write = time.perf_counter()
     tables.write_partitioned(spans, spans_dir, "part_id", spark)
+    t_lineage = time.perf_counter()
     try:
         seen = obs.get
     except Py4JJavaError:
@@ -223,31 +264,19 @@ def run_checkpointed(
         seen = {"parts": [], "docs_in": 0}
     processed = sorted(set(seen["parts"]) - set(fail_parts or ()))
 
-    rows = []
+    run_spans = 0
     if processed:
-        # Read back ONLY this run's partitions (a literal isin() on the
-        # partition column prunes the scan: O(this run's output), never
-        # O(cumulative table)); zero-span partitions get an explicit zero
-        # row (checksum 0) so they count as done
-        stats = lineage(tables.read_table(spark, spans_dir).where(
-            F.col("part_id").isin(processed)))
-        new_lineage = (
-            spark.createDataFrame([(p,) for p in processed], "part_id int")
-            .join(stats, "part_id", "left")
-            .select("part_id", *[F.coalesce(c, F.lit(0)).alias(c)
-                                 for c in stats.columns if c != "part_id"])
-            .withColumn("run_id", F.lit(run_id))
-            .withColumn("completed_at", F.current_timestamp())
-            .withColumn("num_partitions", F.lit(num_partitions))
-        )
-        # at most P rows: collect once, append as one file, stats from them
-        # (coalesce, not fillna: the re-created rows keep non-null columns)
-        rows = new_lineage.collect()
-        tables.append_table(
-            spark.createDataFrame(rows, new_lineage.schema).coalesce(1),
-            lineage_dir, spark)
+        # one aggregate over ONLY this run's partitions (a literal isin() on
+        # the partition column prunes the scan: O(this run's output), never
+        # O(cumulative table)); the at most P rows append as one file
+        new_lineage = _lineage_table(
+            lineage(tables.read_table(spark, spans_dir).where(
+                F.col("part_id").isin(processed))),
+            processed, run_id, num_partitions)
+        tables.append_table(spark.createDataFrame(new_lineage).coalesce(1),
+                            lineage_dir, spark)
+        run_spans = pc.sum(new_lineage["span_count"]).as_py()
 
-    run_spans = sum(int(r.span_count) for r in rows)
     # cumulative size from the P-row lineage (one row per done part_id),
     # NOT from a count() scan of the cumulative spans table
     return {
@@ -257,6 +286,8 @@ def run_checkpointed(
         "total_span_count": run_spans + sum(
             int(r.span_count or 0) for r in prior),   # from lineage, O(P)
         "docs_in": int(seen["docs_in"]),              # observed, no pass
+        "write_s": round(t_lineage - t_write, 3),
+        "lineage_s": round(time.perf_counter() - t_lineage, 3),
     }
 
 
@@ -333,7 +364,9 @@ def upsert_docs(
             f"{lineage_dir} has no num_partitions column — this output was "
             "not created by a batch run_checkpointed run (streaming-sink "
             "lineage carries batch_id instead) and does not support upsert")
-    stored = prior.select(F.max("num_partitions")).first()[0]
+    # at most P rows: read once for the salt modulus and the survivors
+    prior = prior.toArrow()
+    stored = pc.max(prior["num_partitions"]).as_py()
     if stored is None:
         raise ValueError(
             f"{lineage_dir} has only null num_partitions values — cannot "
@@ -378,29 +411,22 @@ def upsert_docs(
                 shutil.rmtree(f"{spans_dir}/part_id={pid}",
                               ignore_errors=True)
 
-    stats = lineage(merged)
-    affected_df = spark.createDataFrame(
-        [(p,) for p in affected], "part_id int")
-    new_lineage = (
-        affected_df.join(stats, "part_id", "left")
-        .fillna(0, subset=[c for c in stats.columns if c != "part_id"])
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("completed_at", F.current_timestamp())
-        .withColumn("num_partitions", F.lit(num_partitions))
-    )
-    # replace the affected partitions' lineage rows (keep the rest):
-    # materialize the merged table BEFORE touching the old files, write to
-    # a sibling dir, swap (Iceberg: one MERGE commit does both)
-    survivors = prior.where(~F.col("part_id").isin(affected))
-    merged_lineage = (survivors.select(new_lineage.columns)
-                      .unionByName(new_lineage)
-                      .localCheckpoint(eager=True))
+    # replace the affected partitions' lineage rows (keep the rest): the
+    # merged rows are built on the driver, in the lineage table's schema,
+    # BEFORE touching the old files; write to a sibling dir, swap (Iceberg:
+    # one MERGE commit does both)
+    new_lineage = _lineage_table(lineage(merged), affected, run_id,
+                                 num_partitions)
+    survivors = prior.filter(pc.invert(pc.is_in(
+        prior["part_id"], pa.array(affected, pa.int32()))))
+    merged_lineage = spark.createDataFrame(pa.concat_tables([
+        survivors.select(new_lineage.column_names).cast(new_lineage.schema),
+        new_lineage])).coalesce(1)
     if tables.is_table_identifier(out_dir):
         # Iceberg: one atomic replace commit
         merged_lineage.writeTo(lineage_dir).createOrReplace()
     else:
-        merged_lineage.repartition(1).write.mode("overwrite").parquet(
-            lineage_dir + "_new")
+        merged_lineage.write.mode("overwrite").parquet(lineage_dir + "_new")
         import os
         import shutil
         # rename the live table ASIDE first (never delete-then-move): a

@@ -176,20 +176,13 @@ def _lineage_batch_writer(spark: SparkSession, out_dir: str,
     lineage_dir = f"{out_dir}/lineage"
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        from pyspark.errors import AnalysisException
-
         bid = int(batch_id)
-        try:
-            lin_tbl = spark.read.parquet(lineage_dir)
-        except AnalysisException as e:
-            # ONLY "table does not exist yet" means not-committed; any other
-            # read failure must surface — treating a transient error as
-            # "batch not committed" would re-append lineage rows and
-            # double-count span totals (ADVICE r3).
-            if ("PATH_NOT_FOUND" not in str(e)
-                    and "Path does not exist" not in str(e)):
-                raise
-            lin_tbl = None
+        # ONLY "table does not exist yet" means not-committed; any read
+        # failure of an existing table must surface — treating a transient
+        # error as "batch not committed" would re-append lineage rows and
+        # double-count span totals (ADVICE r3).
+        lin_tbl = (spark.read.parquet(lineage_dir)
+                   if tables.table_exists(spark, lineage_dir) else None)
         done = 0
         if lin_tbl is not None:
             if "batch_id" not in lin_tbl.columns:

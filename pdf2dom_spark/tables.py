@@ -43,14 +43,30 @@ def is_table_identifier(source: str) -> bool:
             and not source.endswith(".parquet"))
 
 
+def _require_iceberg(spark: SparkSession, source: str) -> None:
+    if not iceberg_available(spark):
+        raise RuntimeError(
+            f"'{source}' looks like a catalog table but no Iceberg "
+            "runtime is on the classpath; pass a parquet path or add "
+            "the iceberg-spark-runtime package")
+
+
+def table_exists(spark: SparkSession, source: str) -> bool:
+    """True when ``source`` exists: a catalog table, or a path on any
+    Hadoop filesystem (local dirs and URIs alike). Checking first keeps a
+    fresh target from costing a read that fails analysis."""
+    if is_table_identifier(source):
+        _require_iceberg(spark, source)
+        return spark.catalog.tableExists(source)
+    path = spark._jvm.org.apache.hadoop.fs.Path(source)  # noqa: SLF001
+    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
+    return fs.exists(path)
+
+
 def read_table(spark: SparkSession, source: str) -> DataFrame:
     """documents table -> DataFrame (Iceberg table or parquet dir)."""
     if is_table_identifier(source):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{source}' looks like a catalog table but no Iceberg "
-                "runtime is on the classpath; pass a parquet path or add "
-                "the iceberg-spark-runtime package")
+        _require_iceberg(spark, source)
         return spark.read.format("iceberg").load(source)
     return spark.read.parquet(source)
 
@@ -67,10 +83,7 @@ def write_partitioned(df: DataFrame, target: str,
     cols = ([partition_col] if isinstance(partition_col, str)
             else list(partition_col))
     if is_table_identifier(target):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{target}' looks like a catalog table but no Iceberg "
-                "runtime is on the classpath")
+        _require_iceberg(spark, target)
         if not spark.catalog.tableExists(target):
             # first write must CREATE the partitioned table —
             # overwritePartitions requires an existing one
@@ -105,10 +118,7 @@ def append_table(df: DataFrame, target: str,
     """Append rows (lineage): Iceberg append or parquet append."""
     spark = spark or df.sparkSession
     if is_table_identifier(target):
-        if not iceberg_available(spark):
-            raise RuntimeError(
-                f"'{target}' looks like a catalog table but no Iceberg "
-                "runtime is on the classpath")
+        _require_iceberg(spark, target)
         if not spark.catalog.tableExists(target):
             df.writeTo(target).create()
         else:

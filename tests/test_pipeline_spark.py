@@ -3,8 +3,12 @@ checkpoint-resume idempotence under failure injection, skew handling."""
 
 from __future__ import annotations
 
+import contextlib
+from datetime import datetime
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pdf2dom_spark.corpus import build_docs_df
 from pdf2dom_spark.pipeline import (extract_spans, lineage, run_checkpointed,
@@ -59,6 +63,28 @@ def test_lineage_reconciles(spark, docs):
     tot = lin.agg(F.sum("doc_count"), F.sum("span_count")).first()
     assert tot[0] == docs.count()
     assert tot[1] == spans.count()
+
+
+def test_lineage_doc_count_single_exchange(spark, docs, tmp_path):
+    """lineage counts each doc's order-0 span: equal to countDistinct(doc_id)
+    on flat and paged (everything split) outputs, with one exchange where
+    countDistinct plans two."""
+    from pdf2dom_spark.pagesplit import extract_spans_paged
+
+    flat = extract_spans(docs, num_partitions=8,
+                         nested=False).localCheckpoint(eager=True)
+    paged = extract_spans_paged(docs, num_partitions=8, pages_per_group=4,
+                                min_bytes=0).localCheckpoint(eager=True)
+    for spans in (flat, paged):
+        ref = spans.groupBy("part_id").agg(
+            F.countDistinct("doc_id").alias("doc_count"))
+        got = lineage(spans).select("part_id", "doc_count")
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, ref.collect()))
+    flat.write.partitionBy("part_id").parquet(str(tmp_path / "spans"))
+    plan = (lineage(spark.read.parquet(str(tmp_path / "spans")))
+            ._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
 def test_resume_idempotent(spark, docs, tmp_path):
@@ -215,6 +241,126 @@ def test_input_evaluated_once(spark, docs, tmp_path):
             assert rows.value == n, (split, rows.value)
 
 
+# the schema every lineage file is written with, nullability included
+LINEAGE_SCHEMA = T.StructType(
+    [T.StructField("part_id", T.IntegerType(), True)]
+    + [T.StructField(c, T.LongType(), False)
+       for c in ("doc_count", "span_count", "n_text", "n_page", "n_rect",
+                 "n_line", "n_image", "n_font", "n_meta")]
+    + [T.StructField("max_doc_spans", T.IntegerType(), False),
+       T.StructField("checksum", T.LongType(), False),
+       T.StructField("run_id", T.StringType(), False),
+       T.StructField("completed_at", T.TimestampType(), False),
+       T.StructField("num_partitions", T.IntegerType(), False)])
+
+
+def _file_schemas(table_dir):
+    """The StructType Spark wrote into each parquet file's footer
+    (spark.read.parquet reports every column nullable)."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    key = b"org.apache.spark.sql.parquet.row.metadata"
+    return [T.StructType.fromJson(json.loads(pq.read_schema(f).metadata[key]))
+            for f in sorted(glob.glob(f"{table_dir}/*.parquet"))]
+
+
+def test_lineage_schema_pinned(spark, docs, tmp_path):
+    """Every lineage file has one schema, nullability included: after a
+    crashed first run, the resume's append, a paged run and an upsert's
+    rewrite. Each run's completed_at falls inside its call, and every
+    call keeps the other partitions' rows as they were."""
+    import os
+
+    from pdf2dom_spark.pipeline import upsert_docs
+
+    out, paged = str(tmp_path / "pin"), str(tmp_path / "pin_paged")
+    ids = [r.doc_id for r in docs.select("doc_id").limit(10).collect()]
+    updated = (docs.where(F.col("doc_id").isin(ids))
+               .withColumn("spans", F.reverse("spans")))
+    calls = [
+        (out, "r1", lambda: run_checkpointed(
+            spark, docs, out, num_partitions=8, run_id="r1",
+            fail_parts={2, 5})),
+        (out, "r2", lambda: run_checkpointed(
+            spark, docs, out, num_partitions=8, run_id="r2")),
+        (paged, "p1", lambda: run_checkpointed(
+            spark, docs, paged, num_partitions=8, run_id="p1",
+            split_min_bytes=0, pages_per_group=4)),
+        (out, "u1", lambda: upsert_docs(spark, updated, out, run_id="u1")),
+    ]
+    for target, run_id, call in calls:
+        before = ({r.part_id: r for r in
+                   spark.read.parquet(f"{target}/lineage").collect()}
+                  if os.path.isdir(f"{target}/lineage") else {})
+        t0 = datetime.now()
+        call()
+        t1 = datetime.now()
+        schemas = _file_schemas(f"{target}/lineage")
+        assert schemas and all(s == LINEAGE_SCHEMA for s in schemas), (
+            run_id, schemas)
+        lin = spark.read.parquet(f"{target}/lineage").collect()
+        stamps = [r.completed_at for r in lin if r.run_id == run_id]
+        assert stamps and all(t0 <= s <= t1 for s in stamps), run_id
+        kept = [r for r in lin if r.run_id != run_id]
+        assert all(r == before[r.part_id] for r in kept)
+    assert len(lin) == 8 and len(kept) < 8
+
+
+@contextlib.contextmanager
+def _jvm_log(spark):
+    """Collect what the JVM logs (log4j root logger) inside the block; the
+    text is complete once the listener bus has drained."""
+    jvm = spark._jvm
+    writer = jvm.java.io.StringWriter()
+    appender = (jvm.org.apache.logging.log4j.core.appender.WriterAppender
+                .createAppender(None, None, writer, "pytest-capture",
+                                False, True))
+    appender.start()
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    root.addAppender(appender, None, None)
+    ctx.updateLoggers()
+    try:
+        yield writer
+    finally:
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        root.removeAppender("pytest-capture")
+        appender.stop()
+        ctx.updateLoggers()
+
+
+def test_fresh_run_runs_no_failing_lineage_read(spark, docs, tmp_path):
+    """On a fresh output neither job.main's fresh-run guard nor
+    run_checkpointed's prior-lineage read runs a query that fails analysis
+    (once an Observation has run in the session, each such query logs a
+    listener ERROR stack). An existing but unreadable lineage dir still
+    reads as nothing done."""
+    import os
+
+    import job
+
+    small = docs.limit(40).localCheckpoint(eager=True)
+    run_checkpointed(spark, small, str(tmp_path / "arm"), num_partitions=4)
+    small.write.parquet(str(tmp_path / "docs"))
+    with _jvm_log(spark) as log:
+        fresh = run_checkpointed(spark, small, str(tmp_path / "fresh"),
+                                 num_partitions=4)
+        assert job.main(["--input", str(tmp_path / "docs"), "--output",
+                         str(tmp_path / "cli"), "--partitions", "4"]) == 0
+    assert "Listener threw an exception" not in log.toString()
+    assert fresh["parts_done"] == 4
+    assert spark.read.parquet(f"{tmp_path}/cli/lineage").count() == 4
+
+    os.makedirs(tmp_path / "empty" / "lineage")
+    again = run_checkpointed(spark, small, str(tmp_path / "empty"),
+                             num_partitions=4)
+    assert again["span_count"] == fresh["span_count"]
+    assert again["parts_done"] == 4
+
+
 def test_skew_docs_exist_and_balanced(spark, docs):
     # the rich corpus has a deterministic skew tail; salting must keep the
     # max-partition share bounded
@@ -247,7 +393,12 @@ def test_tables_fallback_and_identifier_routing(spark, tmp_path):
     # parquet path round-trip through the same API the pipeline uses
     from pyspark.sql import functions as F
     df = spark.range(10).withColumn("part_id", (F.col("id") % 2).cast("int"))
+    assert tables.table_exists(spark, f"{tmp_path}/t") is False
     tables.write_partitioned(df, f"{tmp_path}/t", "part_id", spark)
+    assert tables.table_exists(spark, f"{tmp_path}/t") is True
+    assert tables.table_exists(spark, f"file://{tmp_path}/t") is True
+    with _pytest.raises(RuntimeError, match="Iceberg"):
+        tables.table_exists(spark, "lake.db.documents")
     back = tables.read_table(spark, f"{tmp_path}/t")
     assert back.count() == 10
     # partition-replacing semantics: rewriting part 0 leaves part 1 intact
