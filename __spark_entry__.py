@@ -3,7 +3,7 @@
 - ``entry(spark)`` — flagship: build the deterministic interleaved
   text+media corpus from /root/testdata/sf0.001 and run the full
   Pdf2Dom-equivalent extraction (tokenize -> interpret -> chunk -> ordered
-  spans) through the salted mapInPandas pipeline.
+  spans) through the salted mapInArrow pipeline.
 - ``queries()`` / ``oracle_sql()`` — one entry per implemented operator
   (SURVEY.md §2 + training-data ops); oracles run on DuckDB against the same
   parquet tables.

@@ -162,7 +162,8 @@ def main(argv=None):
             q = extract_pdf_stream_lineage(
                 spark, args.input_pdfs, args.output,
                 f"{args.output}/ckpt", cfg=cfg, num_partitions=p,
-                password=args.pdf_password.encode("utf-8"))
+                password=args.pdf_password.encode("utf-8"),
+                image_pixels=args.image_pixels)
         else:
             from pdf2dom_spark.streaming import extract_spans_stream_lineage
             q = extract_spans_stream_lineage(

@@ -11,8 +11,8 @@ Architecture (Spark-first, not a port):
 
 - The input is a DataFrame of interleaved text+media documents
   ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``.
-- Extraction runs as one ``mapInPandas`` over Arrow batches; inside the UDF
-  everything is columnar pandas/numpy (no per-row Python at the Spark level).
+- Extraction runs as one ``mapInArrow`` over Arrow batches; inside the UDF
+  everything is columnar numpy/Arrow (no per-row Python at the Spark level).
 - Skew from giant documents is defused by salted repartitioning on the raw
   ``xxhash64(doc_id)`` (``part_id = pmod(hash, P)`` stays a deterministic
   COLUMN for lineage/resume).
@@ -29,7 +29,7 @@ Modules:
   raster     — polygon scanline fill + stdlib PNG codec (G11, pixel paths)
   extract    — per-document driver: spans in -> ordered span rows out
   corpus     — deterministic synthetic corpora (fixtures + oracle + rich)
-  pipeline   — Spark-level wiring: salting, mapInPandas, lineage, resume
+  pipeline   — Spark-level wiring: salting, mapInArrow, lineage, resume
   pagesplit  — giant-document page-group fan-out (skew layer 3)
   tables     — Iceberg-or-parquet table IO routing
   streaming  — the same kernel over readStream; watermarked/stateful aggs

@@ -69,51 +69,9 @@ for _u in range(8):
     for _x in range(8):
         _A[_u, _x] = 0.5 * _c * np.cos((2 * _x + 1) * _u * np.pi / 16.0)
 del _u, _c, _x
-
-# einsum contraction lists cached per (expr, operand shapes), REPLAYED
-# locally: np.einsum re-runs its parser + einsum_path validation on every
-# call even when handed an explicit path (measured ~half the contraction
-# wall on small images). einsum_call=True returns the parsed contraction
-# list einsum itself executes; the loop below replays it with the
-# identical tensordot / c_einsum calls (numpy 1.26 einsumfunc.py:1395-
-# 1437), so the numerics stay bit-identical BY CONSTRUCTION while the
-# per-call parse/plan cost is paid once per (expr, shape). Verified
-# array_equal against np.einsum(optimize=path) across 24 shape/expr
-# combos including the BLAS-blocking-sensitive large grids.
-_EINSUM_PATHS: dict = {}
-
-
-def _einsum(expr: str, *ops: np.ndarray) -> np.ndarray:
-    key = (expr, tuple(o.shape for o in ops))
-    clist = _EINSUM_PATHS.get(key)
-    if clist is None:
-        _, clist = np.einsum_path(expr, *ops, optimize=True,
-                                  einsum_call=True)
-        if len(_EINSUM_PATHS) < 4096:
-            _EINSUM_PATHS[key] = clist
-    operands = list(ops)
-    for inds, idx_rm, einsum_str, _remaining, blas in clist:
-        tmp = [operands.pop(x) for x in inds]
-        if blas:
-            input_str, results_index = einsum_str.split('->')
-            input_left, input_right = input_str.split(',')
-            tensor_result = input_left + input_right
-            for s in idx_rm:
-                tensor_result = tensor_result.replace(s, "")
-            left_pos, right_pos = [], []
-            for s in sorted(idx_rm):
-                left_pos.append(input_left.find(s))
-                right_pos.append(input_right.find(s))
-            new_view = np.tensordot(
-                *tmp, axes=(tuple(left_pos), tuple(right_pos)))
-            if tensor_result != results_index:
-                new_view = np.einsum(
-                    tensor_result + '->' + results_index, new_view,
-                    optimize=False)
-        else:
-            new_view = np.einsum(einsum_str, *tmp, optimize=False)
-        operands.append(new_view)
-    return operands[0]
+# the 2-D DCT of a (by, bx, 8, 8) block grid is one batched matmul:
+# forward A @ b @ A.T, inverse A.T @ c @ A (bit-equal to the einsum
+# "ux,mnxy,vy->mnuv" form; pinned in tests/test_micro_equiv.py)
 
 
 class _HuffTable:
@@ -360,7 +318,7 @@ def decode_baseline(data: bytes) -> np.ndarray:
         st = coefs[cid]
         by, bx = st.shape[0], st.shape[1]
         c = st.reshape(by, bx, 8, 8) * q  # dequantize (natural order)
-        px = _einsum("ux,mnuv,vy->mnxy", _A, c, _A)
+        px = _A.T @ c @ _A
         out_planes[cid] = px.transpose(0, 2, 1, 3).reshape(by * 8, bx * 8)
 
     if len(comps) == 1:
@@ -671,7 +629,7 @@ def encode_baseline(img: np.ndarray, quant: int = 1,
         if w < bw * 8:
             padded[:, w:] = padded[:, w - 1:w]
         blocks = (padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3))
-        coef = _einsum("ux,mnxy,vy->mnuv", _A, blocks, _A)
+        coef = _A @ blocks @ _A.T
         qc = np.round(coef / qtab).astype(np.int64)
         all_blocks.append([qc[i, j] for i in range(bh)
                            for j in range(bw)])
@@ -1044,7 +1002,7 @@ def encode_progressive(img: np.ndarray, quant: int = 1,
         if w < bw * 8:
             padded[:, w:] = padded[:, w - 1:w]
         blocks = padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-        coef = _einsum("ux,mnxy,vy->mnuv", _A, blocks, _A)
+        coef = _A @ blocks @ _A.T
         qc = np.round(coef / qtab).astype(np.int64)
         stores[ci + 1] = qc.reshape(bh, bw, 64)
 
@@ -1165,7 +1123,7 @@ def encode_subsampled(img: np.ndarray, quant: int = 1,
     def qblocks(p):
         by, bx = p.shape[0] // 8, p.shape[1] // 8
         blocks = p.reshape(by, 8, bx, 8).transpose(0, 2, 1, 3)
-        coef = _einsum("ux,mnxy,vy->mnuv", _A, blocks, _A)
+        coef = _A @ blocks @ _A.T
         return np.round(coef / qtab).astype(np.int64)
 
     ypad = pad(yy)

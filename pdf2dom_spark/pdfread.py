@@ -1635,6 +1635,46 @@ def pdf_file_to_row(path: str, doc_id: str | None = None,
 # ---------------------------------------------------------------------------
 
 
+def pdf_batch_parser(password: bytes = b"", image_pixels: bool = False,
+                     containers: bool = False):
+    """The mapInPandas body of every binaryFile ingest (``pdf_docs_df``,
+    ``pdf_archive_docs_df``, streaming ``extract_pdf_stream_lineage``):
+    (path, content) batches -> DOC_SCHEMA frames. One row is one PDF
+    (doc_id = file name), or with ``containers=True`` one zip / tar /
+    gzip container whose PDF members become ``<container>/<member>``
+    docs. An unparseable file or member is skipped, never poisoning its
+    batch."""
+    import os
+
+    def parse_batch(it):
+        import pandas as pd
+
+        from .memtune import tune_malloc
+        tune_malloc()  # once per worker: file payloads are large allocs
+        for batch in it:
+            ids, spans = [], []
+            for path, content in zip(batch["path"], batch["content"]):
+                base = os.path.basename(str(path))
+                members = (_container_pdf_members(bytes(content))
+                           if containers else ((None, bytes(content)),))
+                for name, blob in members:
+                    try:
+                        spans.append(pdf_to_spans(
+                            blob, password=password,
+                            image_pixels=image_pixels))
+                        ids.append(base if name is None
+                                   else f"{base}/{name}")
+                    except Exception:
+                        continue
+            # object dtype even when EMPTY: a batch whose every file was
+            # skipped would otherwise produce float64 columns Arrow cannot
+            # cast to list<struct>
+            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object),
+                                "spans": pd.Series(spans, dtype=object)})
+
+    return parse_batch
+
+
 def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
                 image_pixels: bool = False):
     """Distributed real-PDF ingest: ``binaryFile`` scan -> per-file parse in
@@ -1646,37 +1686,14 @@ def pdf_docs_df(spark, path_glob: str, password: bytes = b"",
     mapInPandas — no shuffle at all until the extraction salt. One monster
     PDF cannot skew a task beyond its own size; the extraction stage
     re-salts by doc_id hash anyway (pipeline.extract_spans)."""
-    import os
-
     from .schema import DOC_SCHEMA
-
-    def parse_batch(it):
-        import pandas as pd
-
-        from .memtune import tune_malloc
-        tune_malloc()  # once per worker: file payloads are large allocs
-        for pdf_batch in it:
-            ids, spans = [], []
-            for path, content in zip(pdf_batch["path"], pdf_batch["content"]):
-                try:
-                    spans.append(pdf_to_spans(bytes(content),
-                                              password=password,
-                                              image_pixels=image_pixels))
-                    ids.append(os.path.basename(str(path)))
-                except Exception:
-                    # unparseable file: skip, never poison the batch
-                    continue
-            # object dtype even when EMPTY: a batch whose every file was
-            # skipped would otherwise produce float64 columns Arrow cannot
-            # cast to list<struct>
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object),
-                                "spans": pd.Series(spans, dtype=object)})
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", "*.pdf")
              .load(path_glob)
              .select("path", "content"))
-    return files.mapInPandas(parse_batch, DOC_SCHEMA)
+    return files.mapInPandas(pdf_batch_parser(password, image_pixels),
+                             DOC_SCHEMA)
 
 
 # A crawled-archive corpus can hide zip/gzip bombs; any single member
@@ -1776,32 +1793,15 @@ def pdf_archive_docs_df(spark, path_glob: str, suffix: str = "*",
     salt; a corrupt container or member degrades to a skip, never
     poisoning its batch. Stdlib codecs only — no temp files on
     executors."""
-    import os
-
     from .schema import DOC_SCHEMA
-
-    def parse_batch(it):
-        import pandas as pd
-        for batch in it:
-            ids, spans = [], []
-            for path, content in zip(batch["path"], batch["content"]):
-                base = os.path.basename(str(path))
-                for name, blob in _container_pdf_members(bytes(content)):
-                    try:
-                        spans.append(pdf_to_spans(
-                            blob, password=password,
-                            image_pixels=image_pixels))
-                        ids.append(f"{base}/{name}")
-                    except Exception:
-                        continue  # one bad member never kills the rest
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object),
-                                "spans": pd.Series(spans, dtype=object)})
 
     files = (spark.read.format("binaryFile")
              .option("pathGlobFilter", suffix)
              .load(path_glob)
              .select("path", "content"))
-    return files.mapInPandas(parse_batch, DOC_SCHEMA)
+    return files.mapInPandas(
+        pdf_batch_parser(password, image_pixels, containers=True),
+        DOC_SCHEMA)
 
 
 # ---------------------------------------------------------------------------

@@ -5,7 +5,7 @@ Scale design (the 10^12-doc / 1000-executor story, tested at local[32]):
 - **One shuffle, total.** The only exchange in the whole job is the salted
   ``repartition(P, xxhash64(doc_id))`` that defuses skew from giant
   multi-page documents (BASELINE.json north_star). Extraction itself is a
-  narrow ``mapInArrow``/``mapInPandas``; the lineage aggregate is a
+  narrow ``mapInArrow``; the lineage aggregate is a
   partial-agg over the already-partitioned output, so AQE coalesces it
   cheaply. (Monster documents optionally fan out per page-group first —
   pagesplit.py.)
@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
-from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_batch
+from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
 from .schema import SPAN_FLAT_SCHEMA, SPAN_SCHEMA
 
 
@@ -68,6 +68,10 @@ def extract_spans(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
     per-document independent, so no second shuffle is needed; ``part_id``
     stays the deterministic column either way. This shuffles the small
     (doc_id, payload) rows once instead of re-shuffling them post-synthesis.
+
+    ``nested=True`` returns SPAN_SCHEMA (one ``style`` struct);
+    ``nested=False`` keeps the flat ``style_*`` columns (SPAN_FLAT_SCHEMA).
+    Both run the one mapInArrow kernel (``extract.make_extract_arrow``).
     """
     spark = docs.sparkSession
     p = num_partitions or int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
@@ -79,13 +83,24 @@ def extract_spans(docs: DataFrame, cfg: ExtractConfig = DEFAULT_CONFIG,
         # hash balances by law of large numbers; part_id stays a
         # deterministic *column* for lineage/resume either way.
         salted = salted.repartition(p, F.xxhash64(F.col("doc_id")))
-    if nested:
-        return salted.mapInPandas(make_extract_batch(cfg, nested=True),
-                                  SPAN_SCHEMA)
-    # flat path goes through mapInArrow: pyarrow batches in/out skip pandas
-    # block consolidation on the (large) output side
-    from .extract import make_extract_arrow
-    return salted.mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
+    kernel = make_extract_arrow(cfg)
+    if not nested:
+        return salted.mapInArrow(kernel, SPAN_FLAT_SCHEMA)
+    # nested: the same flat kernel, its style_* arrays gathered into the
+    # ``style`` struct in Arrow (zero-copy: the children are the arrays)
+    schema = to_arrow_schema(SPAN_SCHEMA)
+    style = schema.field("style").type
+
+    def nest_style(batches):
+        for b in kernel(batches):
+            struct = pa.StructArray.from_arrays(
+                [b.column(f"style_{f.name}") for f in style],
+                fields=list(style))
+            yield pa.RecordBatch.from_arrays(
+                [struct if f.name == "style" else b.column(f.name)
+                 for f in schema], schema=schema)
+
+    return salted.mapInArrow(nest_style, SPAN_SCHEMA)
 
 
 def lineage(spans: DataFrame) -> DataFrame:
@@ -245,7 +260,6 @@ def run_checkpointed(
         # leaves ~1/e of the extraction tasks empty — same Poisson-occupancy
         # fix as extract_spans above); part_id stays the deterministic COLUMN
         pending = pending.repartition(num_partitions, F.xxhash64("doc_id"))
-        from .extract import make_extract_arrow
         spans = pending.mapInArrow(make_extract_arrow(cfg),
                                    SPAN_FLAT_SCHEMA)
     if fail_parts:
@@ -380,7 +394,6 @@ def upsert_docs(
         return {"run_id": run_id, "parts_touched": 0, "docs_updated": 0}
     updated_ids = salted.select("doc_id").distinct()
 
-    from .extract import make_extract_arrow
     fresh = (salted.repartition(
         min(num_partitions, max(len(affected), 1)), F.xxhash64("doc_id"))
         .mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA))

@@ -10,10 +10,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .corpus import image_span, text_span
 from .extract import ExtractConfig
-from .qshared import (ORACLE_COLS, RICH_LITE_COLS, _doc_ids,
-                      _extract_flat, make_reg)
-from .schema import SPAN_FLAT_SCHEMA
+from .qshared import ORACLE_COLS, RICH_LITE_COLS, _extract_flat, make_reg
 
 REGISTRY: dict = {}
 ORACLES: dict[str, str] = {}
@@ -1024,30 +1023,18 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM documents
 """)
 def cos_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans(doc_id: str, _text: str) -> list[dict]:
+        i = int(doc_id)
+        c1 = 65 + i % 26
+        c2 = 66 + i % 25
+        c3 = 67 + i % 24
+        lit = (chr(c1) + "\\" + format(c2, "03o")
+               + "\\(" + "\\)" + "\\\\")
+        return [text_span("612 792 0 PG BT /Mono 10 Tf 1 0 0 1 72 700 Tm "
+                          f"({lit}) Tj <41{c3:02x}ff> Tj ET", 0)]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                c1 = 65 + i % 26
-                c2 = 66 + i % 25
-                c3 = 67 + i % 24
-                lit = (chr(c1) + "\\" + format(c2, "03o")
-                       + "\\(" + "\\)" + "\\\\")
-                frag = ("612 792 0 PG BT /Mono 10 Tf 1 0 0 1 72 700 Tm "
-                        f"({lit}) Tj <41{c3:02x}ff> Tj ET")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            yield docs_frame_to_spans(pd.DataFrame(rows), ExtractConfig())
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _extract_flat(spark, sf_dir, mode=spans,
+                         columns=["doc_id", "kind", "text"])
     return flat.where(F.col("kind") == "text").select(
         F.col("doc_id").cast("long").alias("doc_id"), "text")
 
@@ -1068,28 +1055,13 @@ SELECT CAST(doc_id AS BIGINT) AS doc_id,
 FROM documents
 """)
 def resource_embed_datauri(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans(doc_id: str, _text: str) -> list[dict]:
+        i = int(doc_id)
+        return [text_span("612 792 0 PG", 0),
+                image_span(f"media:{i}", 64, 48, f"Im{i % 7}", 1)]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([
-                    {"kind": "text", "text": "612 792 0 PG",
-                     "media_ref": None, "offset": 0},
-                    {"kind": "image", "text": f"64 48 Im{i % 7}",
-                     "media_ref": f"media:{i}", "offset": 1},
-                ])
-            yield docs_frame_to_spans(
-                pd.DataFrame(rows), ExtractConfig(image_handler="embed"))
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _extract_flat(spark, sf_dir, ExtractConfig(image_handler="embed"),
+                         mode=spans, columns=["doc_id", "kind", "media_ref"])
     return (flat.where(F.col("kind") == "image")
             .select(F.col("doc_id").cast("long").alias("doc_id"),
                     F.concat(F.lit("data:image/png;base64,"),
@@ -1115,28 +1087,15 @@ FROM documents d
 CROSS JOIN (SELECT unnest([0, 1, 2]) AS ord) o
 """)
 def dup_overlap_stream_order(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans(doc_id: str, _text: str) -> list[dict]:
+        c = chr(65 + int(doc_id) % 26)
+        return [text_span("612 792 0 PG BT /Mono 10 Tf "
+                          f"1 0 0 1 72 700 Tm (B{c}) Tj "
+                          f"1 0 0 1 72 750 Tm (A{c}) Tj "
+                          f"1 0 0 1 72 700 Tm (B{c}) Tj ET", 0)]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                c = chr(65 + i % 26)
-                frag = ("612 792 0 PG BT /Mono 10 Tf "
-                        f"1 0 0 1 72 700 Tm (B{c}) Tj "
-                        f"1 0 0 1 72 750 Tm (A{c}) Tj "
-                        f"1 0 0 1 72 700 Tm (B{c}) Tj ET")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            yield docs_frame_to_spans(pd.DataFrame(rows), ExtractConfig())
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _extract_flat(spark, sf_dir, mode=spans,
+                         columns=["doc_id", "order", "kind", "text"])
     w = Window.partitionBy("doc_id").orderBy("order")
     return (flat.where(F.col("kind") == "text")
             .select(F.col("doc_id").cast("long").alias("doc_id"),
@@ -1172,48 +1131,61 @@ SELECT doc_id, CAST(a AS INT) AS w, CAST(b AS INT) AS h,
 FROM rows GROUP BY doc_id, a, b
 """)
 def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
-
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        import base64
-
-        from .raster import decode_png_rgba
-
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                a, b = 20 + i % 13, 10 + i % 7
-                frag = (f"612 792 0 PG 72 700 m {72 + a} 700 l "
-                        f"72 {700 - b} l h f")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            flat = docs_frame_to_spans(
-                pd.DataFrame(rows), ExtractConfig(raster_paths=True))
-            img = flat[flat["kind"] == "image"]
-            out = {"doc_id": [], "w": [], "h": [], "filled_px": []}
-            for _, rec in img.iterrows():
-                png = base64.b64decode(rec["media_ref"].split(",", 1)[1])
-                arr = decode_png_rgba(png)
-                out["doc_id"].append(int(rec["doc_id"]))
-                out["w"].append(int(rec["style_width"]))
-                out["h"].append(int(rec["style_height"]))
-                out["filled_px"].append(int((arr[:, :, 3] == 255).sum()))
-            yield pd.DataFrame(out)
-
     import pyspark.sql.types as T
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from .extract import extract_doc_parts, finalize_docs
+
+    cfg = ExtractConfig(raster_paths=True)
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
         T.StructField("w", T.IntegerType()),
         T.StructField("h", T.IntegerType()),
         T.StructField("filled_px", T.LongType()),
     ])
-    return src.mapInPandas(kernel, schema)
+    arrow_schema = to_arrow_schema(schema)
+
+    def kernel(batches):
+        import base64
+
+        import numpy as np
+        import pyarrow as pa
+
+        from .raster import decode_png_rgba
+
+        for batch in batches:
+            ids = batch.column(0).to_numpy()
+            if not len(ids):
+                continue
+            parts = []
+            for i in ids.tolist():
+                a, b = 20 + i % 13, 10 + i % 7
+                frag = (f"612 792 0 PG 72 700 m {72 + a} 700 l "
+                        f"72 {700 - b} l h f")
+                parts.append(extract_doc_parts(str(i), [text_span(frag, 0)],
+                                               cfg))
+            # image rows straight from the finalize columns: widths are
+            # cut to the float32 output contract before int truncation
+            cols, counts = finalize_docs(parts, columns={
+                "kind", "media_ref", "style_width", "style_height"})
+            img = cols["kind"] == "image"
+            filled = [
+                int((decode_png_rgba(base64.b64decode(
+                    ref.split(",", 1)[1]))[:, :, 3] == 255).sum())
+                for ref in cols["media_ref"][img]]
+            yield pa.RecordBatch.from_arrays([
+                pa.array(np.repeat(ids, counts)[img], pa.int64()),
+                pa.array(cols["style_width"][img].astype(np.float32)
+                         .astype(np.int32)),
+                pa.array(cols["style_height"][img].astype(np.float32)
+                         .astype(np.int32)),
+                pa.array(filled, pa.int64()),
+            ], schema=arrow_schema)
+
+    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
+    return (spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+            .repartition(p, F.xxhash64("doc_id"))
+            .mapInArrow(kernel, schema))
 
 
 # 1f. font family parse (F1; FontTable.java:31,105-118)
@@ -1233,50 +1205,11 @@ def raster_fill_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_reg("extract_spans_realfile", _ORACLE_SPANS_SQL)
 def extract_spans_realfile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extract import extract_doc_parts, parts_to_arrow
     from .pdfread import pdf_to_spans
     from .pdfwrite import oracle_pdf_bytes
 
-    # uniform per-doc work (oracle corpus): single-wave task count, like
-    # _extract_flat's non-rich modes
-    p = min(int(spark.conf.get("spark.sql.shuffle.partitions", "32")),
-            spark.sparkContext.defaultParallelism)
-    src = (spark.read.parquet(f"{sf_dir}/documents.parquet")
-           .select("doc_id", "text")
-           .repartition(p, F.xxhash64("doc_id")))
+    def spans(doc_id: str, text: str) -> list[dict]:
+        return pdf_to_spans(oracle_pdf_bytes(doc_id, text))
 
-    def kernel(batches):
-        cfg = ExtractConfig()
-        for b in batches:
-            names = b.schema.names
-            doc_ids = [str(d) for d in
-                       b.column(names.index("doc_id")).to_pylist()]
-            texts = b.column(names.index("text")).to_pylist()
-            parts_list = [
-                extract_doc_parts(did, pdf_to_spans(
-                    oracle_pdf_bytes(did, text)), cfg)
-                for did, text in zip(doc_ids, texts)]
-            yield parts_to_arrow(parts_list, doc_ids, None,
-                                 columns=ORACLE_COLS)
-
-    import pyspark.sql.types as T
-    _want = set(ORACLE_COLS)
-    flat = src.mapInArrow(
-        kernel, T.StructType(
-            [f for f in SPAN_FLAT_SCHEMA.fields if f.name in _want]))
-    return flat.select(
-        "doc_id",
-        F.col("order").cast("int").alias("ord"),
-        "kind", "text", "media_ref",
-        F.col("page_no").cast("int").alias("page_no"),
-        F.round(F.col("style_left").cast("double"), 2).alias("left_pt"),
-        F.round(F.col("style_top").cast("double"), 2).alias("top_pt"),
-        F.round(F.col("style_width").cast("double"), 2).alias("width_pt"),
-        F.round(F.col("style_height").cast("double"), 2).alias("height_pt"),
-        F.round(F.col("style_line_height").cast("double"), 2)
-            .alias("line_height"),
-        F.round(F.col("style_font_size").cast("double"), 2)
-            .alias("font_size"),
-        F.col("style_color").alias("color"),
-        F.col("style_font_family").alias("font_family"),
-    )
+    return _oracle_proj(_extract_flat(spark, sf_dir, mode=spans,
+                                      columns=ORACLE_COLS))

@@ -7,6 +7,8 @@ pieces more than one domain uses.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -29,7 +31,7 @@ RICH_LITE_COLS = ORACLE_COLS + [
 
 def _extract_flat(spark: SparkSession, sf_dir: str,
                   cfg: ExtractConfig | None = None,
-                  mode: str = "oracle",
+                  mode: str | Callable[[str, str], list[dict]] = "oracle",
                   where: str | None = None,
                   columns: list[str] | None = None) -> DataFrame:
     """ONE shuffle of the SMALL (doc_id, text) rows on the raw 64-bit hash
@@ -41,7 +43,11 @@ def _extract_flat(spark: SparkSession, sf_dir: str,
     measured 34% of the sf0.1 query wall time. The kernel is mapInArrow
     end-to-end (r6): building the output RecordBatch directly from the
     finalize arrays skips pandas frame construction + per-column
-    to_numeric coercion — measured 2x on the output half of the kernel."""
+    to_numeric coercion — measured 2x on the output half of the kernel.
+
+    ``mode`` names a corpus generator (``corpus.stream_fn``) or is itself
+    a ``(doc_id, text) -> spans`` function, for the gates with their own
+    per-doc input (fixed closed-form streams, the real-file round trip)."""
     from .corpus import stream_fn
     from .extract import extract_doc_parts, parts_to_arrow
 
@@ -55,7 +61,7 @@ def _extract_flat(spark: SparkSession, sf_dir: str,
         # stays scale-adaptive rather than a local[32] constant.
         p = min(p, spark.sparkContext.defaultParallelism)
     kcfg = cfg or ExtractConfig()
-    sgen = stream_fn(mode)
+    sgen = stream_fn(mode) if isinstance(mode, str) else mode
     src = spark.read.parquet(f"{sf_dir}/documents.parquet")
     if where:
         # routing predicate over the RAW source columns — pushed to the
@@ -83,16 +89,6 @@ def _extract_flat(spark: SparkSession, sf_dir: str,
             yield parts_to_arrow(parts_list, doc_ids, None, columns=columns)
 
     return src.mapInArrow(kernel, out_schema)
-
-
-def _doc_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """doc_id-only source, salted on the raw 64-bit hash — the shared
-    scaffold of the synthesize-inside-the-query kernel gates."""
-    p = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    return (spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .select("doc_id").repartition(p, F.xxhash64("doc_id")))
-
-
 
 
 def make_reg(registry: dict, oracles: dict):

@@ -9,9 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .extract import ExtractConfig
-from .qshared import _doc_ids, _extract_flat, make_reg
-from .schema import SPAN_FLAT_SCHEMA
+from .qshared import make_reg
 from . import textops
 
 REGISTRY: dict = {}

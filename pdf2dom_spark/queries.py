@@ -12,7 +12,6 @@ from __future__ import annotations
 
 from . import htmlops, multimodal, qkernel, qrel, qsketch, qunits
 from . import simsearch, textops
-from .qshared import _doc_ids, _extract_flat  # noqa: F401 (re-export)
 
 # Back-compat view: the split domain registries merged, so
 # queries.REGISTRY / queries.ORACLES keep working for tests.

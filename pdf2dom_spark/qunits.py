@@ -9,15 +9,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .extract import ExtractConfig
-from .qshared import _doc_ids, _extract_flat, make_reg
-from .schema import SPAN_FLAT_SCHEMA
+from .corpus import text_span
+from .qshared import _extract_flat, make_reg
 
 REGISTRY: dict = {}
 ORACLES: dict[str, str] = {}
 _reg = make_reg(REGISTRY, ORACLES)
 
-from .corpus import build_docs_df
 from .fonts import (CSS_FONT_FAMILY, CSS_FONT_STYLE, CSS_FONT_WEIGHT,
                     PD_FONT_TYPE)
 
@@ -246,32 +244,23 @@ SELECT doc_id,
 FROM m
 """)
 def line_width_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import pandas as pd
+    def spans(doc_id: str, _text: str) -> list[dict]:
+        i = int(doc_id)
+        a = 1.0 + (i % 5) * 0.5
+        d = 1.0 + (i % 3) * 0.25
+        s = 0.5 + (i % 4)
+        x1 = 100 + (i % 7) * 10
+        sel = i % 3
+        x2 = 300 if sel < 2 else x1
+        y2 = 100 if sel == 0 else 180
+        return [text_span(
+            f"612 792 0 PG q {a:g} 0 0 {d:g} 0 0 cm {s:g} w "
+            f"0 0 0.9 RG {x1:g} 100 m {x2:g} {y2:g} l S Q", 0)]
 
-    from .extract import docs_frame_to_spans
-
-    src = _doc_ids(spark, sf_dir)
-
-    def kernel(batches):
-        for pdf in batches:
-            rows = {"doc_id": [], "spans": []}
-            for doc_id in pdf["doc_id"]:
-                i = int(doc_id)
-                a = 1.0 + (i % 5) * 0.5
-                d = 1.0 + (i % 3) * 0.25
-                s = 0.5 + (i % 4)
-                x1 = 100 + (i % 7) * 10
-                sel = i % 3
-                x2 = 300 if sel < 2 else x1
-                y2 = 100 if sel == 0 else 180
-                frag = (f"612 792 0 PG q {a:g} 0 0 {d:g} 0 0 cm {s:g} w "
-                        f"0 0 0.9 RG {x1:g} 100 m {x2:g} {y2:g} l S Q")
-                rows["doc_id"].append(str(i))
-                rows["spans"].append([{"kind": "text", "text": frag,
-                                       "media_ref": None, "offset": 0}])
-            yield docs_frame_to_spans(pd.DataFrame(rows), ExtractConfig())
-
-    flat = src.mapInPandas(kernel, SPAN_FLAT_SCHEMA)
+    flat = _extract_flat(spark, sf_dir, mode=spans, columns=[
+        "doc_id", "kind", "style_left", "style_top", "style_width",
+        "style_height", "style_stroke_width", "style_angle",
+        "style_stroke_color"])
     return (flat.where(F.col("kind") == "line").select(
         F.col("doc_id").cast("long").alias("doc_id"),
         F.round(F.col("style_left").cast("double"), 2).alias("left_pt"),

@@ -94,7 +94,4 @@ LINEAGE_SCHEMA = T.StructType(
     ]
 )
 
-# Column order the pandas kernel produces (matches SPAN_FLAT_SCHEMA).
-SPAN_FLAT_COLUMNS = [f.name for f in SPAN_FLAT_SCHEMA.fields]
-
 STYLE_FIELDS = [f.name for f in STYLE_STRUCT.fields]

@@ -7,7 +7,7 @@ the identical extraction kernel over ``readStream`` so the same code serves
 both modes:
 
   - ``extract_spans_stream`` — file-source stream of DOC_SCHEMA parquet ->
-    the same ``mapInPandas`` extraction (stateless, so it composes with any
+    the same ``mapInArrow`` extraction (stateless, so it composes with any
     trigger) -> parquet sink with checkpointLocation. ``availableNow`` gives
     exactly-once batch-backfill semantics; the same query with a continuous
     trigger is the live-ingest path.
@@ -25,7 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_batch
+from .extract import DEFAULT_CONFIG, ExtractConfig, make_extract_arrow
 from .schema import DOC_SCHEMA, SPAN_FLAT_SCHEMA
 
 
@@ -44,7 +44,6 @@ def extract_spans_stream(spark: SparkSession, docs_dir: str,
     from .pipeline import with_part_id
     salted = with_part_id(stream, num_partitions).repartition(
         num_partitions, F.xxhash64("doc_id"))
-    from .extract import make_extract_arrow
     spans = salted.mapInArrow(make_extract_arrow(cfg), SPAN_FLAT_SCHEMA)
     return (spans.writeStream
             .format("parquet")
@@ -197,7 +196,6 @@ def _lineage_batch_writer(spark: SparkSession, out_dir: str,
             return
         salted = with_part_id(batch_df, num_partitions).repartition(
             num_partitions, F.xxhash64("doc_id"))
-        from .extract import make_extract_arrow
         spans = (salted.mapInArrow(make_extract_arrow(cfg),
                                    SPAN_FLAT_SCHEMA)
                  .withColumn("batch_id", F.lit(bid)))
@@ -239,17 +237,20 @@ def extract_pdf_stream_lineage(spark: SparkSession, pdf_dir: str,
                                out_dir: str, checkpoint_dir: str,
                                cfg: ExtractConfig = DEFAULT_CONFIG,
                                num_partitions: int = 8,
-                               password: bytes = b""):
+                               password: bytes = b"",
+                               image_pixels: bool = False):
     """Live ingest of REAL .pdf files: a streaming ``binaryFile`` source
     watches the directory (new files are discovered incrementally and
     tracked in the checkpoint, so a restart never re-parses processed
-    files), each micro-batch parses its files in the same narrow
-    mapInPandas as the batch ``pdf_docs_df``, and extraction lands
-    through the identical replay-safe foreachBatch lineage sink. The
-    drop-a-directory-of-crawled-PDFs deployment shape — no parquet
-    staging step."""
+    files), each micro-batch parses its files with the batch ingest's
+    parser (``pdfread.pdf_batch_parser``, the same narrow mapInPandas as
+    ``pdf_docs_df``), and extraction lands through the identical
+    replay-safe foreachBatch lineage sink. The drop-a-directory-of-
+    crawled-PDFs deployment shape — no parquet staging step."""
     from pyspark.sql.types import (BinaryType, LongType, StringType,
                                    StructField, StructType, TimestampType)
+
+    from .pdfread import pdf_batch_parser
 
     bin_schema = StructType([
         StructField("path", StringType()),
@@ -257,31 +258,13 @@ def extract_pdf_stream_lineage(spark: SparkSession, pdf_dir: str,
         StructField("length", LongType()),
         StructField("content", BinaryType()),
     ])
-
-    def parse_batch(it):
-        import os
-
-        import pandas as pd
-
-        from .pdfread import pdf_to_spans
-        for batch in it:
-            ids, spans = [], []
-            for path, content in zip(batch["path"], batch["content"]):
-                try:
-                    spans.append(pdf_to_spans(bytes(content),
-                                              password=password))
-                    ids.append(os.path.basename(str(path)))
-                except Exception:
-                    continue  # unparseable/locked file: skip
-            yield pd.DataFrame({"doc_id": pd.Series(ids, dtype=object),
-                                "spans": pd.Series(spans, dtype=object)})
-
     stream = (spark.readStream.format("binaryFile").schema(bin_schema)
               .option("pathGlobFilter", "*.pdf")
               .option("maxFilesPerTrigger", 64)
               .load(pdf_dir)
               .select("path", "content")
-              .mapInPandas(parse_batch, DOC_SCHEMA))
+              .mapInPandas(pdf_batch_parser(password, image_pixels),
+                           DOC_SCHEMA))
     writer = _lineage_batch_writer(spark, out_dir, cfg, num_partitions)
     return (stream.writeStream
             .foreachBatch(writer)

@@ -3,6 +3,8 @@ queries()/oracle_sql() keys line up; job.py CLI runs end-to-end."""
 
 from __future__ import annotations
 
+from tests.conftest import SF_SMOKE
+
 
 def test_entry_smoke(spark):
     import __spark_entry__ as e
@@ -13,6 +15,34 @@ def test_entry_smoke(spark):
     assert len(rows) > 0
     assert {"doc_id", "order", "kind", "text", "media_ref", "style",
             "page_no", "part_id"} <= set(df.columns)
+
+
+def test_entry_schema_and_style_struct(spark):
+    """The entry contract: entry() has SPAN_SCHEMA exactly (nullability
+    included), and its ``style`` struct carries the same values as the
+    flat ``style_*`` columns of the flat kernel, row for row."""
+    from pyspark.sql import functions as F
+
+    import __spark_entry__ as e
+    from pdf2dom_spark.corpus import build_docs_df
+    from pdf2dom_spark.pipeline import extract_spans
+    from pdf2dom_spark.schema import SPAN_SCHEMA, STYLE_FIELDS
+
+    nested = e.entry(spark)
+    assert nested.schema == SPAN_SCHEMA  # StructField == compares nullable
+
+    docs = build_docs_df(spark, SF_SMOKE, mode="rich")
+    flat = extract_spans(docs, num_partitions=8, nested=False)
+    base = ["doc_id", "order", "kind", "text", "media_ref", "page_no",
+            "part_id"]
+    unnested = nested.select(
+        *base, *[F.col(f"style.{f}").alias(f"style_{f}")
+                 for f in STYLE_FIELDS])
+    flat = flat.select(*base, *[f"style_{f}" for f in STYLE_FIELDS])
+    n = nested.count()
+    assert n > 0 and flat.count() == n
+    assert unnested.exceptAll(flat).count() == 0
+    assert flat.exceptAll(unnested).count() == 0
 
 
 def test_registry_alignment():

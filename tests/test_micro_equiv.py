@@ -14,7 +14,7 @@ import pytest
 
 from pdf2dom_spark import fonts
 from pdf2dom_spark.interp import ident, mat, _IDENT
-from pdf2dom_spark.jpegdec import _A, _einsum
+from pdf2dom_spark.jpegdec import _A
 from pdf2dom_spark.pdfread import _parse_name, _skip_ws, Name
 
 
@@ -72,21 +72,22 @@ def test_mat_matches_nested_list_array():
                           np.array([[1, 0], [0, 1], [7, 8]], np.float64))
 
 
-# --- jpegdec: cached-contraction replay vs np.einsum -----------------------
+# --- jpegdec: batched-matmul block DCT vs np.einsum ------------------------
 
 @pytest.mark.parametrize("shape", [(1, 1), (3, 4), (7, 7), (40, 60),
                                    (3, 200), (128, 96)])
 def test_einsum_replay_bitequal_decode_and_encode(shape):
-    # includes large grids where BLAS blocking is operand-order-sensitive
+    # the batched-matmul block DCT must equal np.einsum(optimize=True)
+    # bit for bit; includes large grids where BLAS blocking is operand-order-sensitive
     # (a naive tensordot reorder was measured NOT bit-equal there)
     m, n = shape
     rng = np.random.default_rng(m * 1000 + n)
-    for expr, scale in (("ux,mnuv,vy->mnxy", 512.0),
-                        ("ux,mnxy,vy->mnuv", 255.0)):
+    for expr, scale, dct in (
+            ("ux,mnuv,vy->mnxy", 512.0, lambda c: _A.T @ c @ _A),
+            ("ux,mnxy,vy->mnuv", 255.0, lambda b: _A @ b @ _A.T)):
         x = rng.standard_normal((m, n, 8, 8)) * scale
         want = np.einsum(expr, _A, x, _A, optimize=True)
-        got = _einsum(expr, _A, x, _A)
-        assert np.array_equal(want, got)
+        assert np.array_equal(want, dct(x))
 
 
 # --- pdfread: regex name-body scan vs byte loop ----------------------------

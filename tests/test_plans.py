@@ -118,7 +118,7 @@ def test_no_python_udf_outside_extraction(spark):
     from pdf2dom_spark.queries import all_queries
     for name, fn in all_queries().items():
         if name.startswith(("extract_", "mm_", "render_")):
-            continue  # mapInPandas kernels (the designated Arrow UDFs)
+            continue  # Arrow-batch kernels (the designated Python UDFs)
         plan = _plan(fn(spark, SF_SMOKE))
         assert "EvalPython" not in plan, f"{name} uses a Python UDF"
 

@@ -377,3 +377,35 @@ def test_pdf_file_stream_matches_batch_ingest(spark, tmp_path):
     assert spans2.where("doc_id = 'late.pdf'").count() > 0
     assert spans2.count() > n1
     assert spans2.select("doc_id").distinct().count() == 3
+
+
+def test_pdf_file_stream_honours_image_pixels(spark, tmp_path):
+    """``job.main --stream --input-pdfs --image-pixels`` decodes the DCT
+    image like the batch ingest: both land the same PNG data-URI
+    media_ref (the streaming parser is the batch one)."""
+    import numpy as np
+
+    import job
+    from pdf2dom_spark.jpegdec import encode_baseline
+    from pdf2dom_spark.pdfwrite import dct_image_pdf_bytes
+
+    src = tmp_path / "pdfs"
+    src.mkdir()
+    img = np.random.default_rng(7).integers(0, 256, (24, 32, 3),
+                                            dtype=np.uint8)
+    (src / "photo.pdf").write_bytes(
+        dct_image_pdf_bytes(encode_baseline(img), 32, 24, ncomp=3))
+
+    def image_refs(out: str, *extra: str) -> list[str]:
+        assert job.main(["--input-pdfs", str(src), "--output", out,
+                         "--partitions", "2", "--image-pixels",
+                         *extra]) == 0
+        spans = spark.read.parquet(f"{out}/spans")
+        return [r.media_ref for r in
+                spans.where(F.col("kind") == "image").collect()]
+
+    batch = image_refs(str(tmp_path / "batch"))
+    stream = image_refs(str(tmp_path / "stream"), "--stream")
+    assert len(batch) == 1
+    assert batch[0].startswith("data:image/png;base64,")
+    assert stream == batch
